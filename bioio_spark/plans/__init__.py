@@ -39,20 +39,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return re.findall(r"PushedFilters: \[([^\]\n]*)", physical_plan(df))
 
 
-def scan_read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema of every file scan — the column-pruning evidence."""
-    return re.findall(r"ReadSchema: ([^\s,][^\n]*)", physical_plan(df))
-
-
-def assert_filter_pushed(df: DataFrame, *fragments: str) -> None:
-    """Assert each fragment (e.g. ``EqualTo(t,1)``) appears in some scan's
-    PushedFilters."""
-    pushed = "; ".join(pushed_filters(df))
-    for frag in fragments:
-        assert frag in pushed, (
-            f"filter {frag!r} not pushed to any scan; pushed: {pushed!r}")
-
-
 def broadcast_join_count(df: DataFrame) -> int:
     return physical_plan(df).count("BroadcastHashJoin")
 

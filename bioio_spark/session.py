@@ -4,6 +4,19 @@ All defaults target correctness-at-scale: UTC session time (parity with the
 DuckDB oracle on naive parquet timestamps), AQE on (runtime coalesce, skew-join
 splitting, broadcast demotion), and Arrow for the pandas bridge used by the
 ndarray materialization path.
+
+Python workers: Spark starts its Python workers through
+``bioio_spark.worker_daemon`` (``spark.python.daemon.module``, a fixed
+default, not a user option). On CPython < 3.12 every Python task re-reads
+the central directory of pyspark.zip once per imported subpackage, because
+``importlib.invalidate_caches()`` runs at task start and zipimport re-reads
+eagerly there (made lazy in 3.12, gh-103200). That floor costs 0.25-0.5
+CPU-s per task; the daemon re-reads an archive only when it changed, a
+guard it installs only on CPython < 3.12. For a local master the package's
+parent directory is put on the workers' ``PYTHONPATH``, ahead of any entries
+the caller passes, so the daemon and every reader closure import the
+package whatever directory launched the session; on a cluster the package
+must be installed on the executors.
 """
 
 from __future__ import annotations
@@ -11,6 +24,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the bioio_spark package
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 
 # Defaults chosen for the local[N] harness; on a real cluster, shuffle
 # partitions are governed by AQE (advisory target) rather than a fixed count.
@@ -37,19 +54,22 @@ _DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    "spark.python.daemon.module": "bioio_spark.worker_daemon",
 }
 
 
 def get_session(app_name: str = "bioio_spark", master: str | None = None,
                 extra_conf: dict | None = None) -> SparkSession:
     """Create (or get) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
-    )
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    if master.startswith("local"):
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, conf.get(key)) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -63,6 +83,11 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     Memoized per session object: query hot paths (load, read_event_stream)
     call this on every invocation, and repeated conf.set calls both cost RPC
     round trips and can invalidate planner caches mid-session.
+
+    Only SQL conf is applied here. An externally built session does not get
+    the worker daemon or the workers' PYTHONPATH from ``get_session``:
+    ``spark.python.daemon.module`` and ``spark.executorEnv.*`` are static,
+    read once when the SparkContext starts.
     """
     if getattr(spark, "_bioio_conf_applied", False):
         return spark

@@ -204,16 +204,3 @@ def _array_to_long_form(arr: np.ndarray, order: str, image_id: str,
         if d not in present:
             pdf[d] = -1
     return pdf.reset_index(drop=True)
-
-
-class ArrayLikeReaderMetadata:
-    """Entry-point-shaped metadata for the built-in reader
-    (ref array_like_reader.py:467-476)."""
-
-    @staticmethod
-    def get_supported_extensions() -> list:
-        return []   # array inputs have no file extensions
-
-    @staticmethod
-    def get_reader():
-        return ArrayLikeReader

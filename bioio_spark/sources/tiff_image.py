@@ -444,6 +444,15 @@ def decode_tiff_files(spark: SparkSession, paths: list[str],
                "y int, x int, s int, value double")
 
 
+def _chunk_frame(spark: SparkSession, tasks: list[tuple],
+                 schema: str) -> DataFrame:
+    """The driver-planned chunk rows as a DataFrame, one row per task.
+    Built from pandas, so Arrow makes it a LocalRelation: its scan runs
+    in the JVM and splits into min(rows, defaultParallelism) slices, with
+    no Python task and no shuffle ahead of the decode."""
+    return spark.createDataFrame(pd.DataFrame(tasks), schema)
+
+
 def read_tiff_planes(spark: SparkSession, path: str,
                      level: int = 0) -> DataFrame:
     """ZERO-SHUFFLE strip/tile -> planes-layout read of ONE
@@ -514,13 +523,11 @@ def read_tiff_planes(spark: SparkSession, path: str,
                           ch["y0"], ch["x0"], ch["h"], ch["w"],
                           pg["dtype"], pg["comp"], pg["pred"],
                           pg["h"], pg["w"], pg.get("jpeg_tables")))
-    task_df = spark.createDataFrame(
-        tasks,
+    task_df = _chunk_frame(
+        spark, tasks,
         "t int, c int, z int, offset long, nbytes long, y0 int, "
         "x0 int, ch int, cw int, dtype string, comp int, pred int, "
-        "page_h int, page_w int, jpeg_tables binary",
-    ).repartition(min(len(tasks),
-                      spark.sparkContext.defaultParallelism))
+        "page_h int, page_w int, jpeg_tables binary")
 
     def decode(batches):
         import numpy as _np
@@ -683,13 +690,11 @@ def read_tiff_window(spark: SparkSession, path: str,
     if not tasks:
         return spark.createDataFrame([], schema)
 
-    task_df = spark.createDataFrame(
-        tasks,
+    task_df = _chunk_frame(
+        spark, tasks,
         "t int, c int, z int, offset long, nbytes long, y0 int, x0 int, "
         "ch int, cw int, dtype string, comp int, pred int, "
-        "page_h int, page_w int, tiled boolean, jpeg_tables binary",
-    ).repartition(min(len(tasks),
-                      spark.sparkContext.defaultParallelism))
+        "page_h int, page_w int, tiled boolean, jpeg_tables binary")
 
     def decode(batches):
         import pandas as _pd
@@ -713,7 +718,8 @@ def read_tiff_window(spark: SparkSession, path: str,
                                 "windowed read supports gray JPEG "
                                 "chunks; use the full reader for RGB")
                         block = np.zeros((row.ch, row.cw), dt)
-                        block[:img.shape[0], :img.shape[1]] =                             img[:row.ch, :row.cw]
+                        block[:img.shape[0], :img.shape[1]] = \
+                            img[:row.ch, :row.cw]
                     else:
                         raw = decompress_tiff_chunk(payload, row.comp)
                         # count= tolerates writers that pad the final

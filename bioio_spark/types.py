@@ -1,4 +1,4 @@
-"""Physical metadata value types + OME pixel-type <-> Spark/numpy mapping.
+"""Physical metadata value types + OME pixel-type <-> numpy mapping.
 
 Mirrors the reference's metadata value objects (bio_image.py:1051-1108) and
 the 10-entry bidirectional OME PixelType <-> numpy dtype map
@@ -9,8 +9,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import NamedTuple, Optional
-
-from pyspark.sql import types as T
 
 
 class PhysicalPixelSizes(NamedTuple):
@@ -108,26 +106,6 @@ OME_TO_NUMPY_DTYPE = {
 }
 NUMPY_DTYPE_TO_OME = {v: k for k, v in OME_TO_NUMPY_DTYPE.items()}
 
-# numpy dtype name -> Spark SQL type. uint32 widens to long; complex becomes
-# struct<re,im> (SURVEY §1.3); these are the only pixel types the engine
-# accepts, matching the reference's ValueError on unknowns (ome_utils.py:98-99)
-_COMPLEX64 = T.StructType([T.StructField("re", T.FloatType()),
-                           T.StructField("im", T.FloatType())])
-_COMPLEX128 = T.StructType([T.StructField("re", T.DoubleType()),
-                            T.StructField("im", T.DoubleType())])
-NUMPY_TO_SPARK_TYPE = {
-    "int8": T.ByteType(),
-    "int16": T.ShortType(),
-    "int32": T.IntegerType(),
-    "uint8": T.ShortType(),
-    "uint16": T.IntegerType(),
-    "uint32": T.LongType(),
-    "float32": T.FloatType(),
-    "float64": T.DoubleType(),
-    "complex64": _COMPLEX64,
-    "complex128": _COMPLEX128,
-}
-
 
 def dtype_to_ome_type(dtype) -> str:
     """numpy dtype -> OME PixelType; ValueError on unknown
@@ -146,10 +124,3 @@ def ome_to_numpy_dtype(ome_type: str):
     if ome_type not in OME_TO_NUMPY_DTYPE:
         raise ValueError(f"Unsupported OME PixelType: {ome_type}")
     return np.dtype(OME_TO_NUMPY_DTYPE[ome_type])
-
-
-def spark_type_for_dtype(dtype) -> T.DataType:
-    name = getattr(dtype, "name", str(dtype))
-    if name not in NUMPY_TO_SPARK_TYPE:
-        raise ValueError(f"Unsupported dtype: {name}")
-    return NUMPY_TO_SPARK_TYPE[name]

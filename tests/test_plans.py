@@ -792,3 +792,25 @@ def test_e4_transition_total_is_broadcast(spark):
     plan = physical_plan(q(spark, "e4_markov_transitions"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan
+
+
+def test_tiff_window_chunk_plan_scans_in_the_jvm(spark, tmp_path):
+    """read_tiff_window: the driver's chunk plan is an Arrow-built local
+    relation scanned straight into the decode — LocalTableScan, then
+    MapInPandas, then the residual Filter. No Exchange, and no Python RDD
+    scan (Arrow's silent fallback to the pickled path shows as Scan
+    ExistingRDD) that would run identity tasks in Python workers."""
+    import re
+
+    import numpy as np
+
+    from bioio_spark.formats.tiff import encode_ome_tiff
+    from bioio_spark.sources.tiff_image import read_tiff_window
+
+    block = np.arange(2 * 48 * 48, dtype=np.uint16).reshape(1, 2, 1, 48, 48)
+    path = tmp_path / "tiled.ome.tiff"
+    path.write_bytes(encode_ome_tiff(block, tile=(16, 16), compression=8))
+    plan = physical_plan(read_tiff_window(spark, str(path), c=1,
+                                          y=(10, 30), x=(5, 40)))
+    nodes = re.findall(r"^[\s:|+\-*()\d]*(\w+)", plan, re.M)
+    assert nodes == ["Filter", "MapInPandas", "LocalTableScan"], plan
