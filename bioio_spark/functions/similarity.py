@@ -375,40 +375,33 @@ def ivf_topk(embeddings: DataFrame, query_vec_id: int = 1, k: int = 10,
 
     Train: see _train_ivf — sample-trained, session-cached, exact
     fixed-point means.
-    Assign: each vector to its max-cosine trained centroid, computed PER
-    ROW against broadcast literal centroids via higher-order functions — a
-    narrow projection, no shuffle, no 8x row duplication (vs the naive
-    crossJoin + window argmax).
-    Probe: the query searches only the `n_probe` centroids nearest to it
-    (picked driver-side at build time, like any ANN index probe); exact
-    cosine + top-k within the probed inverted lists.
+    Assign: each vector to its max-cosine trained centroid, ONCE PER
+    INDEX — the persisted inverted-list table of _assigned_frame, shared
+    with ivf_adc_topk and semantic_dedup. A query never re-evaluates the
+    per-row argmax.
+    Probe: the query vector is looked up in the lists, and the query
+    searches only the `n_probe` centroids nearest to it (picked
+    driver-side at build time, like any ANN index probe); exact cosine +
+    top-k within the probed inverted lists.
 
     At 100 TB: training is one narrow sampled assignment + one tiny shuffle
-    (n_centroids x dim integer partial sums), amortized across queries by
-    the index cache; search assignment is embarrassingly parallel; the
-    probed filter cuts the candidate set by ~n_centroids/n_probe before the
-    only wide op (TakeOrderedAndProject top-k, which aggregates
-    per-partition heaps). Tie-break: equal cosine -> smallest centroid id
-    (matches oracle's ORDER BY cos DESC, cid ASC).
+    (n_centroids x dim integer partial sums), and the list build one
+    narrow projection, both amortized across queries by the index cache;
+    the probed filter cuts the candidate set by ~n_centroids/n_probe
+    before the only wide op (TakeOrderedAndProject top-k, which
+    aggregates per-partition heaps). Tie-break: equal cosine -> smallest
+    centroid id (matches oracle's ORDER BY cos DESC, cid ASC).
     """
     emb = embeddings.select(
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
-    trained = _train_ivf(emb, n_centroids, sample_mod, cache_key=cache_key)
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q_vec = list(q_rows[0]["e"])
+    trained, lists = _assigned_frame(emb, n_centroids, sample_mod,
+                                     cache_key=cache_key)
+    q_vec = _query_vec(lists, query_vec_id)
 
-    probe_ids = [cid for cid, _ in sorted(
-        ((cid, _cos_py(q_vec, v)) for cid, v in trained.items()),
-        key=lambda t: (-t[1], t[0]))[:n_probe]]
+    probe_ids = _probe_ids(q_vec, trained, n_probe)
 
     return (
-        emb.withColumn("ne", _norm(F.col("e")))
-        .withColumn("cid", _assigned(trained).cast("int"))
-        .filter(F.col("cid").isin(probe_ids))
+        lists.filter(F.col("cid").isin(probe_ids))
         .filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", _cos_lit(q_vec).alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
@@ -551,13 +544,22 @@ LSH_NEAR_DUP_ORACLE = _lsh_oracle()
 
 
 def _assigned_frame(emb: DataFrame, n_centroids: int, sample_mod: int,
-                    cache_key=None) -> DataFrame:
-    """Memoized, persisted (vec_id, cid, e, ne) cluster assignment —
-    the SemDeDup pipeline's materialization point. One persisted frame
-    per (cache_key, n_centroids, sample_mod) per session (the
-    _dedup_reps pattern), so l12 and l12b share a single cached
-    assignment instead of stacking a new one per call; MEMORY_AND_DISK
-    keeps the blocks evictable under storage pressure."""
+                    cache_key=None) -> tuple:
+    """The IVF inverted-list table: `emb`'s columns plus `ne` (the row
+    norm) and `cid` (its max-cosine trained centroid), e.g.
+    (vec_id, label, e, ne, cid). Returns (trained centroids, table).
+
+    The one list mechanism for ivf_topk and ivf_adc_topk (a probe is a
+    filter on cid) and for semantic_dedup/semdedup_sweep (pairs join on
+    cid): the per-row argmax runs once per index, not once per query.
+    Persisted MEMORY_AND_DISK (evictable under storage pressure).
+
+    Keyed: one frame per (cache_key, n_centroids, sample_mod, columns)
+    per session (the _dedup_reps pattern) — the column set keeps a
+    labelled ivf_topk table and an unlabelled semantic_dedup table
+    under one cache_key apart. Un-keyed: registered with
+    swap_held(spark, "ivf_lists"), so the session holds at most one
+    un-keyed list table."""
     spark = emb.sparkSession
     trained = _train_ivf(emb, n_centroids, sample_mod,
                          cache_key=cache_key)
@@ -565,17 +567,44 @@ def _assigned_frame(emb: DataFrame, n_centroids: int, sample_mod: int,
         cache = spark.__dict__.setdefault("_bioio_ivf_cache", {})
     except Exception:
         cache = {}
-    key = ("assigned", cache_key, n_centroids, sample_mod)
+    key = ("assigned", cache_key, n_centroids, sample_mod,
+           tuple(emb.columns))
     if cache_key is not None and key in cache:
-        return cache[key]
+        return trained, cache[key]
     from pyspark import StorageLevel
-    assigned = (emb.withColumn("ne", _norm(F.col("e")))
-                .withColumn("cid", _assigned(trained).cast("int"))
-                .select("vec_id", "cid", "e", "ne")
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    if cache_key is not None:
-        cache[key] = assigned
-    return assigned
+
+    from bioio_spark.functions.dedup import swap_held
+
+    if cache_key is None:
+        # release the previous un-keyed table BEFORE persisting: an
+        # identical plan would share its cache entry, then lose it
+        held = swap_held(spark, "ivf_lists")
+    lists = (emb.withColumn("ne", _norm(F.col("e")))
+             .withColumn("cid", _assigned(trained).cast("int"))
+             .persist(StorageLevel.MEMORY_AND_DISK))
+    if cache_key is None:
+        held.append(lists)
+    else:
+        cache[key] = lists
+    return trained, lists
+
+
+def _probe_ids(q: list, cents: dict, n_probe: int) -> list:
+    """The `n_probe` centroid ids nearest `q` by cosine, ties to the
+    smallest cid — the driver-side IVF probe pick."""
+    return [cid for cid, _ in sorted(
+        ((cid, _cos_py(q, v)) for cid, v in cents.items()),
+        key=lambda t: (-t[1], t[0]))[:n_probe]]
+
+
+def _query_vec(frame: DataFrame, query_vec_id: int) -> list:
+    """The query row's `e` vector from `frame` (one collect)."""
+    q_rows = (frame.filter(F.col("vec_id") == query_vec_id)
+              .select("e").collect())
+    if not q_rows:
+        raise ValueError(
+            f"query vec_id {query_vec_id} not found in embeddings")
+    return [float(v) for v in q_rows[0]["e"]]
 
 
 def semantic_dedup(embeddings: DataFrame, threshold: float = 0.3,
@@ -591,8 +620,8 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.3,
     1. Cluster: the session-cached IVF centroid index (_train_ivf —
        hash-sampled one-Lloyd training with exact fixed-point means,
        bit-stable across engines).
-    2. Assign: per-row max-cosine centroid against broadcast literal
-       centroids — a narrow projection, no shuffle.
+    2. Assign: per-row max-cosine centroid — the persisted IVF
+       inverted-list table (_assigned_frame) ivf_topk probes too.
     3. Pair WITHIN clusters only: self-join keyed on cid (never
        all-pairs); a vector is a semantic duplicate if some
        lower-vec_id vector in its cluster has cosine >= threshold
@@ -619,10 +648,11 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.3,
     # (write the cluster assignment, then dedup per cluster); without
     # this the argmax-over-centroids projection re-evaluates on every
     # consumer (both self-join sides, the anti-join, both summaries).
-    # Memoized per (cache_key, params): repeated l12/l12b calls share
-    # ONE persisted frame instead of leaking a new one per call.
-    assigned = _assigned_frame(emb, n_centroids, sample_mod,
-                               cache_key=cache_key)
+    # Memoized per (cache_key, params, columns): repeated l12/l12b
+    # calls share ONE persisted frame instead of leaking a new one per
+    # call.
+    _, assigned = _assigned_frame(emb, n_centroids, sample_mod,
+                                  cache_key=cache_key)
     from pyspark.sql import Window
     capped = (assigned.withColumn(
         "rn", F.row_number().over(
@@ -772,8 +802,8 @@ def semdedup_sweep(embeddings: DataFrame,
         "vec_id", _to_double(F.col("embedding")).alias("e"))
     # the memoized persisted assignment (shared with semantic_dedup):
     # ~5 consumers below would otherwise each re-evaluate the argmax
-    assigned = _assigned_frame(emb, n_centroids, sample_mod,
-                               cache_key=cache_key)
+    _, assigned = _assigned_frame(emb, n_centroids, sample_mod,
+                                  cache_key=cache_key)
     capped = (assigned.withColumn(
         "rn", F.row_number().over(
             Window.partitionBy("cid").orderBy("vec_id")))
@@ -1020,12 +1050,7 @@ def pq_topk(embeddings: DataFrame, query_vec_id: int = 2, k: int = 10,
                         cache_key=cache_key)
     dim = len(trained[(0, 0)]) * m_sub
     subdim = dim // m_sub
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
 
     # r13: codebooks + LUT ride as a one-row broadcast frame and the
     # codes/sum are HOFs over them (_hof_code ≡ _pq_code bit-for-bit),
@@ -1159,12 +1184,7 @@ def pq_recall(embeddings: DataFrame, query_vec_id: int = 2,
                         cache_key=cache_key)
     dim = len(trained[(0, 0)]) * m_sub
     subdim = dim // m_sub
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
 
     # exact squared L2, summed subspace-by-subspace in the same
     # left-associated order as the oracle's textual expression
@@ -1262,9 +1282,10 @@ PQ_RECALL_ORACLE = _pq_recall_oracle()
 # a documented refinement, not a correctness requirement).
 #
 # Scale shape: both trainings are sampled + session-cached (built once,
-# amortized across queries); assignment and encoding are narrow
-# codegen projections (at ingest time in a real store — the cid and
-# codes columns are what you persist); the probe filter prunes
+# amortized across queries); the cid assignment is the persisted
+# inverted-list table (_assigned_frame, built once per index like the
+# cid column a real store writes at ingest) and encoding a narrow
+# codegen projection; the probe filter prunes
 # ~n_centroids/n_probe of the corpus BEFORE the ADC projection runs
 # (Catalyst orders the filter ahead of the LUT arithmetic), and the
 # only wide op is TakeOrderedAndProject top-k.
@@ -1274,46 +1295,33 @@ def ivf_adc_topk(embeddings: DataFrame, query_vec_id: int = 2,
                  n_probe: int = N_PROBE, m_sub: int = PQ_M,
                  ks: int = PQ_KS, sample_mod: int = IVF_SAMPLE_MOD,
                  cache_key=None) -> DataFrame:
-    """IVF-pruned ADC top-k: assign each vector to its max-cosine IVF
-    centroid, keep only the `n_probe` lists nearest the query, rank
-    survivors by the integer ADC sum. Returns (vec_id, label, adc_q)
-    ordered adc_q ASC, vec_id ASC, k rows."""
+    """IVF-pruned ADC top-k: keep only the `n_probe` inverted lists
+    nearest the query (the persisted _assigned_frame table ivf_topk
+    probes), rank survivors by the integer ADC sum. Returns
+    (vec_id, label, adc_q) ordered adc_q ASC, vec_id ASC, k rows."""
     import math
 
     emb = embeddings.select(
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
-    cents = _train_ivf(emb, n_centroids, sample_mod,
-                       cache_key=cache_key)
+    cents, lists = _assigned_frame(emb, n_centroids, sample_mod,
+                                   cache_key=cache_key)
     books = _train_pq(emb, m_sub, ks, sample_mod, cache_key=cache_key)
     subdim = len(books[(0, 0)])
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
-    probe_ids = [cid for cid, _ in sorted(
-        ((cid, _cos_py(q, v)) for cid, v in cents.items()),
-        key=lambda t: (-t[1], t[0]))[:n_probe]]
+    q = _query_vec(lists, query_vec_id)
+    probe_ids = _probe_ids(q, cents, n_probe)
 
-    # r13: the whole frozen index (coarse centroids + codebooks + the
-    # query's LUT) rides as one-row broadcast frames; assignment and
-    # codes are the proven HOF twins (_hof_assigned ≡ _assigned,
-    # _hof_code ≡ _pq_code), so warm plan construction is constant in
-    # index size (measured 5.4 s -> sub-s) and the probe filter still
-    # prunes before the ADC projection
+    # the probed lists are filtered first; the codebooks and the
+    # query's LUT then ride as one one-row broadcast frame (r13), so
+    # warm plan construction is constant in index size and the ADC
+    # codes (_hof_code ≡ _pq_code) run only on probed rows
     luts = [[int(math.floor(
         _sub_dist_py(q, m * subdim, books[(m, j)])
         * _KMEANS_SCALE)) for j in range(ks)]
         for m in range(m_sub)]
-    cframe = _cents_frame(emb.sparkSession, cents)
     bframe = _adc_frame(emb.sparkSession, books, luts, m_sub, ks)
-    return (emb.crossJoin(F.broadcast(cframe))
-            .crossJoin(F.broadcast(bframe))
-            .withColumn("ne", _norm(F.col("e")))
-            .withColumn("cid", _hof_assigned(len(cents)).cast("int"))
-            .filter(F.col("cid").isin(probe_ids))
+    return (lists.filter(F.col("cid").isin(probe_ids))
             .filter(F.col("vec_id") != query_vec_id)
+            .crossJoin(F.broadcast(bframe))
             .select("vec_id", "label",
                     _hof_adc(m_sub, subdim).cast("bigint")
                     .alias("adc_q"))
@@ -1389,12 +1397,7 @@ def ivf_adc_recall(embeddings: DataFrame, query_vec_id: int = 2,
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
     books = _train_pq(emb, m_sub, ks, sample_mod, cache_key=cache_key)
     subdim = len(books[(0, 0)])
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
 
     exact = _exact_l2(q, m_sub, subdim)
     base = emb.filter(F.col("vec_id") != query_vec_id)
@@ -1552,12 +1555,7 @@ def adc_rerank_planted(embeddings: DataFrame, query_vec_id: int = 2,
     emb = embeddings.select(
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
     aug = _two_tier_planted(emb, query_vec_id, k)
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
     dim = len(q)
     subdim = dim // m_sub
 
@@ -1966,12 +1964,7 @@ def ivf_rpq_topk(embeddings: DataFrame, query_vec_id: int = 2,
                        cache_key=cache_key)
     dim = len(next(iter(cents.values())))
     subdim = dim // m_sub
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
     probe_ids, luts = rpq_query_luts(q, cents, books, n_probe,
                                      m_sub, ks)
     coded = _rpq_codes_frame(emb, cents, books, m_sub, ks,
@@ -2018,9 +2011,7 @@ def rpq_query_luts(q: list, cents: dict, books: dict,
 
     dim = len(next(iter(cents.values())))
     subdim = dim // m_sub
-    probe_ids = [cid for cid, _ in sorted(
-        ((cid, _cos_py(q, v)) for cid, v in cents.items()),
-        key=lambda t: (-t[1], t[0]))[:n_probe]]
+    probe_ids = _probe_ids(q, cents, n_probe)
     luts = {}
     for cid in probe_ids:
         qr = [q[i] - cents[cid][i] for i in range(dim)]
@@ -2162,12 +2153,7 @@ def rpq_vs_raw_recall(embeddings: DataFrame, query_vec_id: int = 2,
     the theory, the honest number goes to SCALING.md instead."""
     emb = embeddings.select(
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
     dim = len(q)
     subdim = dim // m_sub
 
@@ -2322,12 +2308,7 @@ def sq8_topk(embeddings: DataFrame, query_vec_id: int = 2,
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
     mins, maxs = _train_sq(emb, sample_mod, cache_key=cache_key)
     spark = emb.sparkSession
-    q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
-              .select("e").collect())
-    if not q_rows:
-        raise ValueError(
-            f"query vec_id {query_vec_id} not found in embeddings")
-    q = [float(v) for v in q_rows[0]["e"]]
+    q = _query_vec(emb, query_vec_id)
     dim = len(q)
 
     idx = spark.createDataFrame(

@@ -5,6 +5,8 @@ results staying correct is not enough — the *plan* must stay the one that
 survives 100x data. sf0.001 is plenty: plan shape is data-independent for
 these static properties (AQE may improve them at runtime, never worsen)."""
 
+import re
+
 import pytest
 
 from bioio_spark.plans import (
@@ -640,36 +642,55 @@ def test_phash_neardup_fingerprints_cached_no_allpairs(spark):
     assert "BroadcastNestedLoop" not in plan
 
 
+def _cached_scan_head(plan: str) -> str:
+    """The query's own operators: the plan text above its first
+    InMemoryRelation (the cached table's build plan prints below it)."""
+    assert "InMemoryTableScan" in plan, plan[:2000]
+    return plan.split("InMemoryRelation", 1)[0]
+
+
+def test_ivf_topk_probes_the_persisted_lists(spark):
+    """l3c steady query: the IVF probe scans the persisted inverted-list
+    table (an InMemoryRelation built once per index), so the per-row
+    centroid argmax — the 8-way greatest(struct...) — is not in the
+    query's own plan; only the probe filter and the cosine are."""
+    q(spark, "l3c_ivf_topk").collect()       # trains, builds the lists
+    plan = physical_plan(q(spark, "l3c_ivf_topk"))
+    head = _cached_scan_head(plan)
+    assert "greatest" not in head, head[:2000]
+    assert "TakeOrderedAndProject" in head
+
+
 def test_ivf_adc_plan_prunes_before_topk(spark):
     """l3i composed IVF-ADC: the only wide op is the bounded top-k
-    (TakeOrderedAndProject), the probe filter is a pushed isin ahead of
-    the ADC arithmetic, and no data-scale join goes cartesian. r13: the
-    frozen index (centroids + codebooks + LUT) rides as ONE-ROW
-    broadcast LocalRelation frames (the l3k/s15 literal-free device),
-    which plan as BroadcastNestedLoopJoin over a single row — constant
-    work per corpus row, not a cartesian blowup; the pin now asserts
-    those are the only nested-loop joins and that each build side is a
-    LocalTableScan (in-memory one-row relation, never a scanned
-    table)."""
+    (TakeOrderedAndProject), and no data-scale join goes cartesian.
+    The probe is a filter on the persisted inverted-list table (the
+    cid column l3c probes too), applied in the cached scan ahead of the
+    ADC arithmetic; no per-query centroid assignment (greatest or its
+    array_max HOF twin) remains. The codebooks + query LUT ride as ONE
+    one-row broadcast frame (r13), which plans as the plan's only
+    BroadcastNestedLoopJoin — constant work per probed row, not a
+    cartesian blowup."""
     df = q(spark, "l3i_ivf_adc_topk")
     plan = physical_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
-    # every nested-loop join must be the one-row index broadcast: the
-    # plan carries exactly as many one-row relation scans (the index
-    # frames — LocalTableScan or ExistingRDD depending on how
-    # createDataFrame materializes the nested arrays) as
-    # BroadcastNestedLoopJoins, and no other join shape appears
-    n_bnlj = plan.count("BroadcastNestedLoopJoin")
-    assert n_bnlj == 2, plan[:2000]
+    head = _cached_scan_head(plan)
+    assert "greatest" not in head and "array_max" not in head, head[:2000]
+    # the one nested-loop join is the one-row index broadcast, whose
+    # build side is a one-row relation scan (LocalTableScan or
+    # ExistingRDD depending on how createDataFrame materializes the
+    # nested arrays)
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan[:2000]
     n_onerow = plan.count("LocalTableScan") + plan.count(
         "Scan ExistingRDD")
-    assert n_onerow == n_bnlj, plan[:2000]
-    # the probe-list membership filter survives optimization (the cid
-    # argmax is inlined into it), and the query-exclusion predicate is
-    # pushed all the way into the parquet scan
-    assert "IN (" in plan.replace("IN(", "IN (")
-    assert "Not(EqualTo(vec_id,2))" in plan
+    assert n_onerow == 1, plan[:2000]
+    # the probe-list membership and query-exclusion predicates are
+    # pushed into the cached scan
+    scan = next(ln for ln in plan.splitlines()
+                if "InMemoryTableScan" in ln)
+    assert " IN (" in scan.replace("IN(", "IN (")
+    assert re.search(r"NOT \(vec_id#\d+L = 2\)", scan), scan
 
 
 def test_a37_salted_join_spreads_hot_key(spark):
