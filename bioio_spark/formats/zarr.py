@@ -348,14 +348,17 @@ def iter_decoded_blocks(content: bytes, info: dict,
     inner chunks outside `window` (axes-ordered [start, stop) bounds)
     without decompressing them — the in-process analog of the ranged
     GETs a windowed object-store read issues. Blocks are trimmed to the
-    array bounds (edge chunks are stored full-shape, fill-padded)."""
+    array bounds (edge chunks are stored full-shape, fill-padded) and to
+    `window`, each origin moving to the first kept element."""
     shape, chunks = info["shape"], info["chunks"]
     window = info.get("window")
+    bounds = ([(0, s) for s in shape] if window is None else
+              [(max(0, a), min(s, b)) for (a, b), s in zip(window, shape)])
 
     def trim(origin, block):
-        valid = tuple(min(c, s - o)
-                      for o, s, c in zip(origin, shape, block.shape))
-        return block[tuple(slice(0, v) for v in valid)]
+        lo = tuple(max(o, a) for o, (a, _) in zip(origin, bounds))
+        return lo, block[tuple(slice(k - o, max(b - o, 0))
+                               for k, o, (_, b) in zip(lo, origin, bounds))]
 
     def in_window(origin, bshape):
         if window is None:
@@ -369,7 +372,7 @@ def iter_decoded_blocks(content: bytes, info: dict,
         origin = tuple(g * c for g, c in zip(grid, chunks))
         block = dec(content, info["dtype"], chunks, info["compressor"])
         if in_window(origin, chunks):
-            yield origin, trim(origin, block)
+            yield trim(origin, block)
         return
 
     inner = tuple(shard["inner_chunks"])
@@ -394,7 +397,7 @@ def iter_decoded_blocks(content: bytes, info: dict,
             block = decode_chunk_v3(content[off:off + nbytes],
                                     info["dtype"], inner,
                                     info["compressor"])
-        yield origin, trim(origin, block)
+        yield trim(origin, block)
 
 
 # -- OME-NGFF 0.4 attributes ----------------------------------------------

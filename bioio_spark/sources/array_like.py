@@ -20,7 +20,7 @@ partition-pruned on (scene, res_level) and predicate-pushed on t/c/z/y/x.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
@@ -41,19 +41,60 @@ PIXEL_COLUMNS = ["image_id", "scene", "res_level", *PIXEL_DIM_COLS, "value"]
 
 
 class ImageDataset:
-    """Bundle of lazy DataFrames backing one image: pixels + catalogs."""
+    """Bundle of lazy DataFrames backing one image: pixels + catalogs.
 
-    def __init__(self, pixels: DataFrame, scenes: pd.DataFrame,
+    `pixels` is the pixel DataFrame or a zero-argument builder of it. A
+    builder runs on the first access of `pixels` and its frame is kept,
+    so an open that only asks the catalogs (dims, channel names, sizes,
+    a source-pruned window read) never plans the whole-image scan."""
+
+    def __init__(self,
+                 pixels: Union[DataFrame, Callable[[], DataFrame]],
+                 scenes: pd.DataFrame,
                  channels: pd.DataFrame, tiles: Optional[pd.DataFrame] = None,
                  coords: Optional[pd.DataFrame] = None):
-        self.pixels = pixels
+        self._pixels = pixels
         self.scenes = scenes          # small catalog: kept driver-side (pandas)
         self.channels = channels
         self.tiles = tiles
         self.coords = coords
 
+    @property
+    def pixels(self) -> DataFrame:
+        if not isinstance(self._pixels, DataFrame):
+            self._pixels = self._pixels()
+        return self._pixels
+
+    @pixels.setter
+    def pixels(self, df: DataFrame) -> None:
+        self._pixels = df
+
     def scene_ids(self) -> list[str]:
         return list(self.scenes.sort_values("scene_idx")["scene"])
+
+
+# Arrow bytes of one long-form pixel row a windowed decode emits: five
+# int32 coordinates (t, c, z, y, x) and a float64 value.
+PIXEL_ROW_BYTES = 5 * 4 + 8
+
+
+def size_decode_tasks(spark: SparkSession, df: DataFrame,
+                      planned_bytes: int) -> DataFrame:
+    """`df`, one row per planned chunk, coalesced to ceil(planned_bytes /
+    split) partitions. `planned_bytes` is the size of the rows its decode
+    emits (the Arrow batches a Python task builds and ships: a task's
+    work grows with them, not with the stored or decoded chunk bytes);
+    the split is Spark's file-scan rule (FilePartition.maxSplitBytes):
+    min(spark.sql.files.maxPartitionBytes, max(spark.sql.files.
+    openCostInBytes, planned_bytes / defaultParallelism)). A ROI of a
+    few tiles decodes in one task; a read that emits more than one
+    openCostInBytes spreads over the cores. Coalesce is narrow, so no
+    Exchange is planned."""
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(conf.filesMaxPartitionBytes(),
+                max(conf.filesOpenCostInBytes(),
+                    planned_bytes // spark.sparkContext.defaultParallelism))
+    return df.coalesce(max(1, -(-planned_bytes // split)))
 
 
 class ArrayLikeReader:

@@ -176,14 +176,15 @@ class TiffImageReader:
                 si += 1
             path_to_scene[os.path.abspath(p)] = file_scene_names
 
-        px = decode_tiff_files(
-            spark, paths, path_to_scene).select(
-            F.lit(self._image_id).alias("image_id"), "scene",
-            "res_level", "t", "c", "z", "y", "x",
-            F.lit(-1).alias("m"), "s", "value",
-        ).select(*PIXEL_COLUMNS)
+        def pixels():
+            return decode_tiff_files(
+                spark, paths, path_to_scene).select(
+                F.lit(self._image_id).alias("image_id"), "scene",
+                "res_level", "t", "c", "z", "y", "x",
+                F.lit(-1).alias("m"), "s", "value",
+            ).select(*PIXEL_COLUMNS)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
+        return ImageDataset(pixels=pixels, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))
 
     def _non_ome_dataset(self, spark: SparkSession, path: str):
@@ -330,21 +331,22 @@ class TiffImageReader:
                         "value": block.ravel().astype(np.float64),
                     })
 
-        plan_df = spark.createDataFrame(
-            pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  batches,
-                  schema="t int, c int, z int, y int, x int, s int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), "s", "value")
-              .select(*PIXEL_COLUMNS))
+        def pixels():
+            plan_df = spark.createDataFrame(
+                pd.DataFrame(plan)).repartition(
+                min(len(plan), spark.sparkContext.defaultParallelism))
+            return (plan_df.mapInPandas(
+                        batches,
+                        schema="t int, c int, z int, y int, x int, s int, "
+                               "value double")
+                    .select(
+                        F.lit(self._image_id).alias("image_id"),
+                        F.lit(scene).alias("scene"),
+                        F.lit(0).alias("res_level"), "t", "c", "z", "y",
+                        "x", F.lit(-1).alias("m"), "s", "value")
+                    .select(*PIXEL_COLUMNS))
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
+        return ImageDataset(pixels=pixels, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))
 
 
@@ -444,13 +446,30 @@ def decode_tiff_files(spark: SparkSession, paths: list[str],
                "y int, x int, s int, value double")
 
 
-def _chunk_frame(spark: SparkSession, tasks: list[tuple],
-                 schema: str) -> DataFrame:
-    """The driver-planned chunk rows as a DataFrame, one row per task.
-    Built from pandas, so Arrow makes it a LocalRelation: its scan runs
-    in the JVM and splits into min(rows, defaultParallelism) slices, with
-    no Python task and no shuffle ahead of the decode."""
-    return spark.createDataFrame(pd.DataFrame(tasks), schema)
+def _chunk_frame(spark: SparkSession, tasks: list[tuple], schema: str,
+                 window=None) -> DataFrame:
+    """The driver-planned chunk rows as a DataFrame, one row per chunk.
+    Built from pandas, so Arrow makes it a LocalRelation whose scan runs
+    in the JVM, with no Python task and no shuffle ahead of the decode;
+    it splits into min(rows, defaultParallelism) slices. A window read
+    passes its `window` ((y0, y1), (x0, x1)), and the frame is coalesced
+    to the task count its long-form rows need (size_decode_tasks): each
+    chunk's pixels inside its page and the window."""
+    from bioio_spark.sources.array_like import (PIXEL_ROW_BYTES,
+                                                size_decode_tasks)
+
+    plan = pd.DataFrame(tasks, columns=[f.split()[0]
+                                        for f in schema.split(",")])
+    df = spark.createDataFrame(plan, schema)
+    if window is None:
+        return df
+    (wy0, wy1), (wx0, wx1) = window
+    h = (np.minimum(plan.y0 + plan.ch, np.minimum(plan.page_h, wy1))
+         - np.maximum(plan.y0, wy0)).clip(lower=0)
+    w = (np.minimum(plan.x0 + plan.cw, np.minimum(plan.page_w, wx1))
+         - np.maximum(plan.x0, wx0)).clip(lower=0)
+    return size_decode_tasks(spark, df,
+                             int((h * w).sum()) * PIXEL_ROW_BYTES)
 
 
 def read_tiff_planes(spark: SparkSession, path: str,
@@ -588,8 +607,10 @@ def read_tiff_window(spark: SparkSession, path: str,
     intersecting pages and strips/tiles via a seek-based IFD walk (a few
     KB of reads), and executors fetch ONLY those byte ranges — reading
     one plane of a multi-GB pyramidal TIFF touches O(plane/strip) bytes,
-    not the file. The residual trim to exact bounds is a codegen row
-    filter after decode.
+    not the file. Each decoded chunk is sliced to the window before its
+    rows are built, so the plan carries no window literal and no row
+    filter, and the decode runs in as many tasks as the rows it emits
+    need (size_decode_tasks).
 
     Pages map to (t, c, z) in the OME page order (t-major, as the
     reference's OME writers emit); a TIFF without OME metadata reads as
@@ -694,7 +715,8 @@ def read_tiff_window(spark: SparkSession, path: str,
         spark, tasks,
         "t int, c int, z int, offset long, nbytes long, y0 int, x0 int, "
         "ch int, cw int, dtype string, comp int, pred int, "
-        "page_h int, page_w int, tiled boolean, jpeg_tables binary")
+        "page_h int, page_w int, tiled boolean, jpeg_tables binary",
+        (yw, xw))
 
     def decode(batches):
         import pandas as _pd
@@ -732,20 +754,19 @@ def read_tiff_window(spark: SparkSession, path: str,
                             (row.ch, row.cw))
                     if row.pred == 2:
                         block = _undo_horizontal_predictor(block)
-                    # tiles are stored full-size; trim edge overhang
-                    vh = min(row.ch, row.page_h - row.y0)
-                    vw = min(row.cw, row.page_w - row.x0)
-                    block = block[:vh, :vw]
+                    # tiles are stored full-size: slice off the edge
+                    # overhang and everything outside the window
+                    y0, x0 = max(row.y0, yw[0]), max(row.x0, xw[0])
+                    block = block[
+                        y0 - row.y0:min(row.page_h, yw[1]) - row.y0,
+                        x0 - row.x0:min(row.page_w, xw[1]) - row.x0]
                     yy, xx = np.indices(block.shape)
                     yield _pd.DataFrame({
                         "t": np.int32(row.t), "c": np.int32(row.c),
                         "z": np.int32(row.z),
-                        "y": (yy.ravel() + row.y0).astype(np.int32),
-                        "x": (xx.ravel() + row.x0).astype(np.int32),
+                        "y": (yy.ravel() + y0).astype(np.int32),
+                        "x": (xx.ravel() + x0).astype(np.int32),
                         "value": block.ravel().astype(np.float64),
                     })
 
-    px = task_df.mapInPandas(decode, schema=schema)
-    return px.filter(
-        (F.col("y") >= yw[0]) & (F.col("y") < yw[1])
-        & (F.col("x") >= xw[0]) & (F.col("x") < xw[1]))
+    return task_df.mapInPandas(decode, schema=schema)

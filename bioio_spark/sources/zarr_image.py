@@ -206,13 +206,14 @@ class ZarrImageReader:
                     "shard": lza.get("shard"),
                 }
 
-        px = decode_zarr_chunks(spark, arrays).select(
-            F.lit(self._image_id).alias("image_id"), "scene",
-            "res_level", "t", "c", "z", "y", "x",
-            F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value",
-        ).select(*PIXEL_COLUMNS)
+        def pixels():
+            return decode_zarr_chunks(spark, arrays).select(
+                F.lit(self._image_id).alias("image_id"), "scene",
+                "res_level", "t", "c", "z", "y", "x",
+                F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value",
+            ).select(*PIXEL_COLUMNS)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
+        return ImageDataset(pixels=pixels, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))
 
 
@@ -223,9 +224,16 @@ def decode_zarr_chunks(spark: SparkSession,
 
     One pandas frame per chunk bounds executor memory to a single chunk;
     edge chunks are trimmed to the array bounds (Zarr v2 stores them
-    full-shape, fill-padded). `files` restricts the scan to an explicit
-    chunk-file list (the read_zarr_window pruning path); default is every
-    chunk under every array root."""
+    full-shape, fill-padded) and, when an array's decode info carries a
+    `window`, to that window. Default is every chunk under every array
+    root. `files` restricts the scan to an explicit chunk-file list of
+    the one array in `arrays` (the read_zarr_window pruning path); its
+    decode then runs in as many tasks as the rows it emits need
+    (size_decode_tasks): each file's box cut to the array and the
+    window. For a sharded array that is the part of the shard its
+    window-pruned inner chunks yield, not the whole shard."""
+    from bioio_spark.sources.array_like import (PIXEL_ROW_BYTES,
+                                                size_decode_tasks)
     from bioio_spark.sources.tiff_image import local_path
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -246,19 +254,8 @@ def decode_zarr_chunks(spark: SparkSession,
                     raise KeyError(
                         f"decode_zarr_chunks: {path!r} not under any "
                         f"catalogued array root")
-                # "." separator -> flat name "t.c.z.y.x"; "/" separator
-                # -> nested dirs; both normalize through relpath. v3
-                # "default" keys lead with a "c" component.
-                parts = rel.replace(os.sep, ".").split(".")
-                if info.get("key_prefix") and parts[0] == info["key_prefix"]:
-                    parts = parts[1:]
-                grid = [int(p) for p in parts]
-                if len(grid) != len(info["shape"]):
-                    raise ValueError(
-                        f"{rel}: chunk key rank {len(grid)} vs array "
-                        f"rank {len(info['shape'])}")
                 for origin, block in iter_decoded_blocks(
-                        bytes(content), info, grid):
+                        bytes(content), info, _chunk_grid(rel, info)):
                     coords = {d: np.zeros(block.size, dtype=np.int32)
                               for d in "tczyx"}
                     idx = np.indices(block.shape, dtype=np.int32)
@@ -278,11 +275,39 @@ def decode_zarr_chunks(spark: SparkSession,
              if files is not None else [f"file://{d}" for d in arrays])
     binary = (spark.read.format("binaryFile")
               .option("recursiveFileLookup", "true")
-              .load(paths))
-    return binary.select("path", "content").mapInPandas(
+              .load(paths)).select("path", "content")
+    if files is not None:
+        ((arr_dir, info),) = arrays.items()
+        bounds = info.get("window") or [(0, n) for n in info["shape"]]
+        pixels = 0
+        for f in files:
+            grid = _chunk_grid(os.path.relpath(os.path.abspath(f), arr_dir),
+                               info)
+            pixels += int(np.prod([
+                max(0, min(g * c + c, n, b) - max(g * c, a))
+                for g, c, n, (a, b) in zip(grid, info["chunks"],
+                                           info["shape"], bounds)]))
+        binary = size_decode_tasks(spark, binary, pixels * PIXEL_ROW_BYTES)
+    return binary.mapInPandas(
         batches,
         schema="scene string, res_level int, t int, c int, z int, y int, "
                "x int, value double")
+
+
+def _chunk_grid(rel: str, info: dict) -> list[int]:
+    """Chunk grid index of the chunk file at `rel` (relative to its array
+    root). A "." separator gives a flat name "t.c.z.y.x", a "/" separator
+    nested dirs; both normalize through the relative path. v3 "default"
+    keys lead with a "c" component."""
+    parts = rel.replace(os.sep, ".").split(".")
+    if info.get("key_prefix") and parts[0] == info["key_prefix"]:
+        parts = parts[1:]
+    grid = [int(p) for p in parts]
+    if len(grid) != len(info["shape"]):
+        raise ValueError(
+            f"{rel}: chunk key rank {len(grid)} vs array "
+            f"rank {len(info['shape'])}")
+    return grid
 
 
 def _norm_window(sel, size: int) -> tuple[int, int]:
@@ -346,6 +371,12 @@ def _array_of(root: str, level: str | int = 0) -> tuple[str, dict, str]:
         za = parse_zarray(zdoc)
     axes = attrs["axes"] or "tczyx"[-len(za["shape"]):]
     return arr_dir, za, axes
+
+
+def _level_label(level: str | int) -> int:
+    """The res_level a store-level read labels its rows with: the level
+    index, or 0 for a non-numeric dataset path."""
+    return int(level) if str(level).isdigit() else 0
 
 
 def read_zarr_planes(spark: SparkSession, store: str,
@@ -427,8 +458,7 @@ def read_zarr_planes(spark: SparkSession, store: str,
                 yield pd.DataFrame({
                     "image_id": [image_id] * n,
                     "scene": ["Image:0"] * n,
-                    "res_level": np.full(n, int(level) if str(level)
-                                         .isdigit() else 0, np.int32),
+                    "res_level": np.full(n, _level_label(level), np.int32),
                     "t": np.asarray(rows["t"], np.int32),
                     "c": np.asarray(rows["c"], np.int32),
                     "z": np.asarray(rows["z"], np.int32),
@@ -458,8 +488,10 @@ def read_zarr_window(spark: SparkSession, store: str,
     turned into the exact set of intersecting chunk FILES driver-side
     (catalog arithmetic only), and the binaryFile scan lists just those —
     reading one plane of a 100 TB store touches O(plane/chunk) files, not
-    the whole store. The residual trim to exact window bounds is a codegen
-    row filter after decode.
+    the whole store. Each decoded chunk is sliced to the window before its
+    rows are built (iter_decoded_blocks), so the plan carries no window
+    literal and no row filter; rows are labelled with `level` as
+    read_zarr_planes labels them.
 
     This is the pushdown the reference gets from tifffile/zarr slicing
     (ref bio_image.py:764-839 lazy selection); Spark-side it is listing-
@@ -482,24 +514,19 @@ def read_zarr_window(spark: SparkSession, store: str,
         if os.path.exists(p):       # absent chunk = all fill_value
             files.append(p)
     arrays = {os.path.abspath(arr_dir): {
-        "scene": "Image:0", "axes": axes, "res_level": 0,
+        "scene": "Image:0", "axes": axes, "res_level": _level_label(level),
         "shape": za["shape"], "chunks": za["chunks"],
         "dtype": _np.dtype(za["dtype"]).str,
         "compressor": za["compressor"],
         "key_prefix": prefix,
         "gzip_member": za.get("gzip_member", False),
         "shard": za.get("shard"),
-        # inner-chunk pruning inside shards: decode only inner chunks
-        # intersecting the window (the local analog of ranged GETs)
+        # inner-chunk pruning inside shards (the local analog of ranged
+        # GETs) and the trim of every decoded block to the window
         "window": [tuple(w) for w in window],
     }}
     schema = ("scene string, res_level int, t int, c int, z int, y int, "
               "x int, value double")
     if not files:   # whole window lives in absent (all-fill) chunks
         return spark.createDataFrame([], schema)
-    px = decode_zarr_chunks(spark, arrays, files=files)
-    bounds = dict(zip(axes, window))
-    cond = F.lit(True)
-    for d, (start, stop) in bounds.items():
-        cond = cond & (F.col(d) >= start) & (F.col(d) < stop)
-    return px.filter(cond)
+    return decode_zarr_chunks(spark, arrays, files=files)

@@ -351,3 +351,38 @@ def test_read_window_source_pushdown_and_fallback(spark, tmp_path):
 
     zarr_img = BioImage(str(zdir / "scene_0.zarr"), spark=spark)
     assert rows(zarr_img.read_window(**win)) == want
+
+
+@pytest.mark.parametrize("kind", ["tiff", "zarr"])
+def test_open_plans_no_pixel_scan(spark, tmp_path, monkeypatch, kind):
+    """BioImage(path) and the metadata a viewer shows come from the
+    catalog alone: no file scan is planned at open. The pixel plan is
+    built on first use and still reads the image."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from bioio_spark.formats.tiff import encode_ome_tiff
+    from bioio_spark.writers import save_ome_zarr
+
+    block = np.arange(2 * 32 * 32, dtype=np.uint16).reshape(1, 2, 1, 32, 32)
+    if kind == "tiff":
+        path = tmp_path / "tiled.ome.tiff"
+        path.write_bytes(encode_ome_tiff(
+            block, channel_names=["a", "b"], tile=(16, 16), compression=8,
+            physical_pixel_sizes=PhysicalPixelSizes(2.0, 0.5, 0.5)))
+    else:
+        save_ome_zarr(BioImage(block, channel_names=["a", "b"],
+                               physical_pixel_sizes=PhysicalPixelSizes(
+                                   2.0, 0.5, 0.5), spark=spark),
+                      str(tmp_path / "z"), chunks=(1, 1, 1, 16, 16))
+        path = tmp_path / "z" / "scene_0.zarr"
+
+    def no_scan(*_args, **_kwargs):
+        raise AssertionError("opening the image planned a file scan")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "load", no_scan)
+        img = BioImage(str(path), spark=spark)
+        assert img.dims.shape == (1, 2, 1, 32, 32)
+        assert img.channel_names == ["a", "b"]
+        assert img.physical_pixel_sizes == PhysicalPixelSizes(2.0, 0.5, 0.5)
+    np.testing.assert_array_equal(img.get_image_data(), block)

@@ -815,23 +815,117 @@ def test_e4_transition_total_is_broadcast(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
+def _tiled_window_sources(spark, tmp_path):
+    """A 48x48 2-channel image tiled 16x16, as a deflate OME-TIFF file
+    and an OME-Zarr store chunked the same: (block, tiff, zarr store)."""
+    import numpy as np
+
+    from bioio_spark import BioImage
+    from bioio_spark.formats.tiff import encode_ome_tiff
+    from bioio_spark.writers import save_ome_zarr
+
+    block = np.arange(2 * 48 * 48, dtype=np.uint16).reshape(1, 2, 1, 48, 48)
+    tiff = tmp_path / "tiled.ome.tiff"
+    tiff.write_bytes(encode_ome_tiff(block, tile=(16, 16), compression=8))
+    save_ome_zarr(BioImage(block, spark=spark), str(tmp_path / "z"),
+                  chunks=(1, 1, 1, 16, 16))
+    return block, str(tiff), str(tmp_path / "z" / "scene_0.zarr")
+
+
+def _plan_nodes(df):
+    return re.findall(r"^[\s:|+\-*()\d]*(\w+)", physical_plan(df), re.M)
+
+
 def test_tiff_window_chunk_plan_scans_in_the_jvm(spark, tmp_path):
     """read_tiff_window: the driver's chunk plan is an Arrow-built local
-    relation scanned straight into the decode — LocalTableScan, then
-    MapInPandas, then the residual Filter. No Exchange, and no Python RDD
-    scan (Arrow's silent fallback to the pickled path shows as Scan
-    ExistingRDD) that would run identity tasks in Python workers."""
-    import re
+    relation coalesced to the planned-byte task count, then decoded.
+    The window is trimmed in the decoder, so there is no Filter (whose
+    window literals would cost a codegen compile per read), no Exchange,
+    and no Python RDD scan (Arrow's silent fallback to the pickled path
+    shows as Scan ExistingRDD) that would run identity tasks in Python
+    workers."""
+    from bioio_spark.sources.tiff_image import read_tiff_window
 
+    _, tiff, _ = _tiled_window_sources(spark, tmp_path)
+    df = read_tiff_window(spark, tiff, c=1, y=(10, 30), x=(5, 40))
+    assert _plan_nodes(df) == ["MapInPandas", "Coalesce",
+                               "LocalTableScan"], physical_plan(df)
+
+
+def test_zarr_window_chunk_plan_has_no_filter(spark, tmp_path):
+    """read_zarr_window: the pruned chunk-file scan is coalesced to the
+    planned-byte task count and decoded; the window is trimmed in the
+    decoder, so no Filter and no Exchange follow the scan."""
+    from bioio_spark.sources.zarr_image import read_zarr_window
+
+    _, _, store = _tiled_window_sources(spark, tmp_path)
+    df = read_zarr_window(spark, store, c=1, y=(10, 30), x=(5, 40))
+    assert _plan_nodes(df) == ["MapInPandas", "Coalesce",
+                               "FileScan"], physical_plan(df)
+
+
+def test_window_decode_tasks_sized_by_planned_bytes(spark, tmp_path):
+    """A window over 2x2 tiles (300 pixel rows, 8 KB emitted) plans one
+    decode task, by Spark's file-split rule. With
+    spark.sql.files.maxPartitionBytes below the emitted bytes the same
+    read fans out, and returns the same rows, each the image's pixel.
+    A sharded store counts the rows the window takes from each shard,
+    not the shard: 8 rows across two 16x32 shards stay one task."""
+    from bioio_spark import BioImage
+    from bioio_spark.sources.tiff_image import read_tiff_window
+    from bioio_spark.sources.zarr_image import read_zarr_window
+    from bioio_spark.writers import save_ome_zarr
+
+    block, tiff, store = _tiled_window_sources(spark, tmp_path)
+    save_ome_zarr(BioImage(block, spark=spark), str(tmp_path / "s"),
+                  chunks=(1, 1, 1, 16, 16), shards=(1, 1, 1, 16, 32),
+                  ngff_version="0.5")
+    sharded = str(tmp_path / "s" / "scene_0.zarr")
+
+    def rows(df):
+        return sorted(map(tuple, df.select("t", "c", "z", "y", "x",
+                                           "value").collect()))
+
+    def want(ys, xs):
+        return sorted((0, 1, 0, y, x, float(block[0, 1, 0, y, x]))
+                      for y in ys for x in xs)
+
+    win = dict(t=0, c=1, z=0, y=(10, 30), x=(5, 20))
+    for read, src in ((read_tiff_window, tiff), (read_zarr_window, store)):
+        df = read(spark, src, **win)
+        assert df.rdd.getNumPartitions() == 1
+        assert rows(df) == want(range(10, 30), range(5, 20))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try:
+        for read, src in ((read_tiff_window, tiff),
+                          (read_zarr_window, store)):
+            df = read(spark, src, **win)
+            assert df.rdd.getNumPartitions() > 1
+            assert rows(df) == want(range(10, 30), range(5, 20))
+        df = read_zarr_window(spark, sharded, t=0, c=1, z=0, y=(10, 12),
+                              x=(30, 34))
+        assert df.rdd.getNumPartitions() == 1
+        assert rows(df) == want(range(10, 12), range(30, 34))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_mid_size_reads_spread_over_the_cores(spark, tmp_path):
+    """A window that emits more than spark.sql.files.openCostInBytes
+    (4 MB) keeps more than one decode task: 400x400 pixels of a uint16
+    plane (0.3 MB decoded) are 160k long-form rows, 4.5 MB. A planes
+    read keeps one slice per core."""
     import numpy as np
 
     from bioio_spark.formats.tiff import encode_ome_tiff
-    from bioio_spark.sources.tiff_image import read_tiff_window
+    from bioio_spark.sources.tiff_image import (read_tiff_planes,
+                                                read_tiff_window)
 
-    block = np.arange(2 * 48 * 48, dtype=np.uint16).reshape(1, 2, 1, 48, 48)
-    path = tmp_path / "tiled.ome.tiff"
-    path.write_bytes(encode_ome_tiff(block, tile=(16, 16), compression=8))
-    plan = physical_plan(read_tiff_window(spark, str(path), c=1,
-                                          y=(10, 30), x=(5, 40)))
-    nodes = re.findall(r"^[\s:|+\-*()\d]*(\w+)", plan, re.M)
-    assert nodes == ["Filter", "MapInPandas", "LocalTableScan"], plan
+    plane = np.arange(1024 * 1024, dtype=np.uint16).reshape(
+        1, 1, 1, 1024, 1024)
+    path = tmp_path / "plane.ome.tiff"
+    path.write_bytes(encode_ome_tiff(plane, tile=(128, 128)))
+    win = read_tiff_window(spark, str(path), y=(100, 500), x=(100, 500))
+    assert win.rdd.getNumPartitions() == 2
+    assert (read_tiff_planes(spark, str(path)).rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)

@@ -6,6 +6,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import Row
 
 from bioio_spark.formats.zarr import (build_ngff_attrs, build_zarray,
                                       decode_chunk, encode_chunk,
@@ -252,6 +253,25 @@ def test_read_zarr_window_prunes_and_matches(spark, tmp_path):
     # single-pixel probe
     one = read_zarr_window(spark, store, t=0, c=1, z=3, y=7, x=8).toPandas()
     assert len(one) == 1 and one["value"].iloc[0] == a[0, 1, 3, 7, 8]
+
+
+def test_read_zarr_window_labels_rows_with_the_level(spark, tmp_path):
+    """A window read of level k labels its rows res_level=k, the label
+    read_zarr_planes gives the same rows."""
+    from bioio_spark import BioImage
+    from bioio_spark.sources.zarr_image import (read_zarr_planes,
+                                                read_zarr_window)
+
+    a = np.arange(8 * 8, dtype=np.uint16).reshape(1, 1, 1, 8, 8)
+    out = str(tmp_path / "lv.ome.zarr")
+    BioImage(a, spark=spark).save(out, n_levels=2)
+    store = os.path.join(out, "scene_0.zarr")
+    for level in (0, 1):
+        win = read_zarr_window(spark, store, level=level)
+        planes = read_zarr_planes(spark, store, level=level)
+        assert (win.select("res_level").distinct().collect()
+                == planes.select("res_level").distinct().collect()
+                == [Row(res_level=level)])
 
 
 def _write_v3_store(root, full, chunks, gzip_codec=True):
